@@ -1272,9 +1272,10 @@ object Oracles {
         WHERE rn = 1"""
 
   /** A3 on the node table re-derived: per-(surface, pred) last write,
-    * then per-(iri, pred) last write among surface winners — the same
-    * two max_by stages as graphFromTriples(includeProps=true), with the
-    * vocabulary rollup + linking + mint from the kg_nodes_edges CTEs. */
+    * then per-(iri, pred) last write among surface winners — equal to
+    * Pipeline.nodePropsFromVocab's single (iri, pred) max_by (a max of
+    * maxes is the global max), with the vocabulary rollup + linking +
+    * mint from the kg_nodes_edges CTEs. */
   val kgNodeProps: String =
     s"""WITH t AS (SELECT * FROM ${inp("triples")}),
         links AS (SELECT surface, uri FROM ${out("kg_links")}),

@@ -1,18 +1,20 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
-import graft.pipeline.{Corpus, Pipeline}
+import graft.pipeline.{Checkpointed, Corpus}
 
-/** North-rule scaling benchmark: the SAME job (pages → triples → linked
-  * graph materialized to parquet) on the SAME input (identical page
-  * corpus, identical 128-way partitioning) at two parallelism levels —
-  * the sandbox analogue of N vs 4N executors. Run:
+/** North-rule scaling benchmark: the SAME job `graft.Main` ships
+  * (`Checkpointed.runAll`: pages → bucketed triples → linked graph,
+  * into a fresh directory) on the SAME input (identical page corpus,
+  * identical 128-way partitioning) at two parallelism levels — the
+  * single-machine analogue of N vs 4N executors. Run:
   *
   *   sbt "runMain graft.ScalingBench 8 40000"
   *   sbt "runMain graft.ScalingBench 32 40000"
   *
   * and compare docs/s. Efficiency = (docs_s(4N) / docs_s(N)) / 4.
-  * Prints one JSON line. A warm-up run (same size) precedes the measured
+  * Prints one JSON line. A warm-up run (1/8 the size) precedes the measured
   * run so JIT/codegen compilation is excluded from the steady-state
   * number, mirroring a long-running cluster job.
   */
@@ -34,26 +36,23 @@ object ScalingBench {
 
     val kb = Corpus.kb(spark)
 
-    def run(tag: String): (Double, Long, Long, Long) = runN(tag, n)
-
     def runN(tag: String, nRun: Long): (Double, Long, Long, Long) = {
+      // a fresh dir per run: runAll resumes from an existing one
+      val dir = Files.createTempDirectory(
+        Files.createDirectories(Paths.get(outDir)), tag).toString
       val t0 = System.nanoTime()
-      val pages = Corpus.pages(spark, nRun, partitions = 128)
-      val (trip, nodes, edges) = Pipeline.graphCheckpointed(pages, kb, outDir)
-      nodes.write.mode("overwrite").parquet(s"$outDir/nodes")
-      edges.write.mode("overwrite").parquet(s"$outDir/edges")
-      // counts from the written files — no recompute of the plan
-      val nt = trip.count()
-      val nn = spark.read.parquet(s"$outDir/nodes").count()
-      val ne = spark.read.parquet(s"$outDir/edges").count()
+      Checkpointed.runAll(Corpus.pages(spark, nRun, partitions = 128), kb, dir, runId = 1L)
       val dt = (System.nanoTime() - t0) / 1e9
+      // counts from the written files — no recompute of the plan
+      val Seq(nt, nn, ne) = Seq("triples", "nodes", "edges")
+        .map(t => spark.read.parquet(s"$dir/$t").count())
       System.err.println(f"[scaling] $tag cores=$cores pages=$nRun sec=$dt%.2f")
       (dt, nt, nn, ne)
     }
 
     // JIT/codegen warmup on the same plan shapes at 1/8 the data.
     runN("warmup", math.max(n / 8, 5000L))
-    val (dt, nt, nn, ne) = run("measured")
+    val (dt, nt, nn, ne) = runN("measured", n)
     val docsPerSec = n / dt
     val triplesPerSec = nt / dt
     println(f"""{"bench":"scaling","cores":$cores,"pages":$n,"sec":$dt%.3f,"docs_per_sec":$docsPerSec%.1f,"triples_per_sec":$triplesPerSec%.1f,"triples":$nt,"nodes":$nn,"edges":$ne}""")

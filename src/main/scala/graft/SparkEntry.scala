@@ -34,7 +34,7 @@ object SparkEntry {
 
   // --- per-JVM checkpoint of the fused NLP pass -------------------------
   // The flagship architecture is "extract once, query many": the triples
-  // table is a parquet CHECKPOINT (Pipeline.graphCheckpointed's resume
+  // table is a parquet CHECKPOINT (Checkpointed.runAll's resume
   // boundary) and every downstream query reads the file. The kg_*
   // queries follow the same contract here: the first query that needs
   // the extraction (or the resolved-chunk table) writes it under a
@@ -52,23 +52,17 @@ object SparkEntry {
   // get()), while DIFFERENT keys build fully in parallel — the warmup
   // overlaps independent checkpoint builds from a thread pool (guide
   // §2.6: back-fill the tail of one job with the next), which a single
-  // map-wide lock would serialize.
+  // map-wide lock would serialize. A FAILED build is evicted (only if
+  // it is still the key's entry) and its cause rethrown, so the next
+  // call rebuilds instead of replaying the cached error.
   private val ckDone = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.FutureTask[String]]()
-  private def checkpointed(s: SparkSession, key: String)(make: => DataFrame): DataFrame = {
-    val task = new java.util.concurrent.FutureTask[String](() => {
-      val p = s"$ckDir/$key"
-      make.write.mode("overwrite").parquet(p)
-      p
-    })
-    val prev = ckDone.putIfAbsent(key, task)
-    val winner = if (prev == null) { task.run(); task } else prev
-    s.read.parquet(winner.get())
-  }
+  private[graft] def checkpointed(s: SparkSession, key: String)(make: => DataFrame): DataFrame =
+    checkpointedRelease(s, key)((make, () => ()))
 
   /** checkpointed() for builds that hand back a release handle (the
     * graphFromTriplesReleasable contract): release fires right after
-    * the checkpoint write, so the build's internal persisted tables
+    * the checkpoint write, so the build's internal materialized tables
     * never outlive the write. */
   private def checkpointedRelease(s: SparkSession, key: String)(
       make: => (DataFrame, () => Unit)): DataFrame = {
@@ -80,7 +74,13 @@ object SparkEntry {
     })
     val prev = ckDone.putIfAbsent(key, task)
     val winner = if (prev == null) { task.run(); task } else prev
-    s.read.parquet(winner.get())
+    val path =
+      try winner.get()
+      catch { case e: java.util.concurrent.ExecutionException =>
+        ckDone.remove(key, winner)
+        throw e.getCause
+      }
+    s.read.parquet(path)
   }
 
   /** Checkpointed KB link table over the corpus's distinct entity
@@ -193,9 +193,9 @@ object SparkEntry {
     * never pays a count() job per call (VERDICT r03 #1). */
   private lazy val kbCountHint: Option[Long] = Some(Corpus.kbSize())
 
-  /** Checkpointed edge table of the corpus graph at this sf (the same
-    * graphFromTriples build kg_nodes_edges runs, written once and
-    * reused by the graph-analytics queries). */
+  /** Checkpointed edge table of the corpus graph at this sf (the
+    * graphFromTriplesReleasable edge build kg_nodes_edges runs, written
+    * once and reused by the graph-analytics queries). */
   def edgesFor(s: SparkSession, dir: String): DataFrame =
     checkpointed(s, s"edges_${pagesFor(dir)}") {
       val siri = surfaceIriFor(s, dir)
@@ -396,8 +396,8 @@ object SparkEntry {
     }),
     "kg_nodes_edges" -> ((s, dir) => {
       // nodes/edges from the SHARED vocabulary checkpoint (identical
-      // tables: reduceNodes over surfaceIri is the graphFromTriples
-      // node build, and edgesFor is its edge build, checkpointed)
+      // tables: reduceNodes over surfaceIri is the graph build's node
+      // table, and edgesFor is its edge build, checkpointed)
       val trip = triplesFor(s, dir)
       val siri = surfaceIriFor(s, dir)
       val nodes = Pipeline.reduceNodes(siri.select(col("iri"), col("entity_type"),
@@ -465,11 +465,11 @@ object SparkEntry {
     "kg_entity_props" -> ((s, dir) => {
       Kg.entityProps(triplesFor(s, dir))
     }),
-    // A3 on the NODE table: per-IRI props map (graphFromTriples
-    // includeProps tier), exploded for the oracle
+    // A3 on the NODE table: per-IRI props map (nodePropsFromVocab),
+    // exploded for the oracle
     "kg_node_props" -> ((s, dir) => {
-      // the includeProps node tier against the SHARED vocabulary
-      // checkpoint: the original left-join onto the full node table
+      // the node-props tier against the SHARED vocabulary
+      // checkpoint: a left-join onto the full node table
       // then props-not-null filter keeps exactly the byIri rows, so
       // nodePropsFromVocab alone is row-identical (oracle-verified)
       Pipeline.nodePropsFromVocab(triplesFor(s, dir), surfaceIriFor(s, dir))

@@ -36,7 +36,12 @@ object Eval {
     * union the two sides with flag columns and groupBy the key —
     * row-identical to distinct-each-side + full-outer join (a key in
     * pred gets max(in_pred)=1 else null, same for gold) but one
-    * exchange instead of three (two distincts + the join; guide §2.4). */
+    * exchange instead of three (two distincts + the join; guide §2.4).
+    *
+    * Precondition: every key column is non-null on both sides. A null
+    * key is where the two forms differ — groupBy puts null keys into
+    * one group while the join's equality never matches them — so a
+    * caller whose keys may be null must filter them first. */
   private[graft] def membershipFlags(predicted: DataFrame, gold: DataFrame,
       keys: Seq[String]): DataFrame =
     predicted.select(keys.map(col) :+ lit(1).as("in_pred") :+

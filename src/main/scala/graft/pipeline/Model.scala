@@ -69,8 +69,6 @@ final case class TripleRow(
 /** KB label row (SURVEY.md §1 KB store mapping). */
 final case class KbEntry(uri: String, label: String, label_lc: String, types: Seq[String])
 
-final case class LinkedRow(url: String, surface: String, uri: String, confidence: Double)
-
 final case class GoldTriple(url: String, subj: String, pred: String, obj: String)
 
 /** Graph output tables (north rule: Iceberg node/edge tables). */

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Flagship end-to-end pipeline, shaped for 100 TB:
   *
@@ -26,22 +26,6 @@ object Pipeline {
 
   private def jw(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     graft.functions.JaroWinklerExpression.jaroWinkler(a, b)
-
-  /** KB row count under which the KB side of linking is broadcast. Above
-    * it (the survey's own KB model: 10^8-10^9 labels, SURVEY §1) a
-    * broadcast would OOM every executor, so linking switches to shuffle
-    * joins: a plain shuffle for the exact match (labels AND surfaces are
-    * both distinct keys — no skew possible) and a salted shuffle for the
-    * token-blocked fuzzy join (blocks are Zipfian — "the", common first
-    * names — so the KB side is SPLIT by label hash and the
-    * vocabulary-sized miss side replicated per salt). ~5M short label
-    * rows ≈ hundreds of MB — tune per executor memory. Single source of
-    * truth lives in Linking (forwarded here for callers). */
-  val defaultBroadcastKbLimit: Long = Linking.defaultBroadcastKbLimit
-
-  /** Salt count for the large-KB fuzzy blocked join (spreads one hot
-    * block's KB labels over this many shuffle keys). */
-  val fuzzyBlockSalts: Int = Linking.fuzzyBlockSalts
 
   /** Link a distinct-surface DataFrame (column `surface`) against the KB:
     * exact (0.95) else CONTAINS-candidate fuzzy JW (≥0.8), threshold
@@ -70,7 +54,7 @@ object Pipeline {
     * the miss side exploded across salts (replicate the small side,
     * split the big side). Both tiers are result-identical (PlanSpec). */
   def linkSurfaces(surfaces: DataFrame, kb: Dataset[KbEntry],
-      broadcastKbLimit: Long = defaultBroadcastKbLimit,
+      broadcastKbLimit: Long = Linking.defaultBroadcastKbLimit,
       kbCountHint: Option[Long] = None): DataFrame = {
     val kbN = kbCountHint.getOrElse(kb.count())
     val useBroadcast = kbN <= broadcastKbLimit
@@ -102,31 +86,6 @@ object Pipeline {
       .withColumnRenamed("confidence", "link_confidence")
   }
 
-  /** pages → nodes/edges via a CHECKPOINTED triples table: the NLP pass
-    * writes `workDir/triples` once; everything downstream reads the
-    * file. This is both the resume boundary (M7: a killed job rerun
-    * skips the NLP pass) and the fix for cache-miss recompute — a
-    * persist()ed Dataset referenced from several union/broadcast
-    * branches races its own cache population and can silently recompute
-    * the whole NLP lineage per branch (observed: 2× pipeline cost per
-    * downstream action). A parquet boundary cannot be recomputed. */
-  def graphCheckpointed(pages: Dataset[Page], kb: Dataset[KbEntry], workDir: String)
-      : (Dataset[TripleRow], DataFrame, DataFrame) = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    Kg.pagesToTriples(pages).write.mode("overwrite").parquet(s"$workDir/triples")
-    val trip = spark.read.parquet(s"$workDir/triples").as[TripleRow]
-    val (nodes, edges) = graphFromTriples(trip, kb)
-    (trip, nodes, edges)
-  }
-
-  def graph(pages: Dataset[Page], kb: Dataset[KbEntry]): (Dataset[TripleRow], DataFrame, DataFrame) = {
-    val trip = Kg.pagesToTriples(pages)
-      .persist(StorageLevel.MEMORY_AND_DISK) // one NLP pass, reused by every action
-    val (nodes, edges) = graphFromTriples(trip, kb)
-    (trip, nodes, edges)
-  }
-
   /** Vocabulary row count under which the join-back side is broadcast.
     * Above it (open-vocabulary web crawl: 10^8-10^9 distinct surfaces)
     * broadcasting would OOM every executor, so the join-back switches
@@ -138,52 +97,39 @@ object Pipeline {
     * surface key over this many shuffle partitions). */
   val joinBackSalts = 16
 
-  /** Linking + enrichment + materialization from a (cached or
-    * file-backed) triples Dataset.
+  /** THE graph build: triples → (nodes, edges, release). Every caller
+    * that turns triples into a linked graph goes through here —
+    * `Checkpointed.runAll` (what `Main` ships), the `StreamIngest.runLinked`
+    * micro-batch sink and `ScalingBench`.
     *
     * Cost model (the part that must survive 100 TB): exactly ONE
     * aggregation over the big table (the vocabulary rollup —
     * surface→(type, slug), Zipfian mentions collapse to single rows);
-    * linking, IRI minting and node dedup are vocabulary-sized. The
-    * join-back is SIZE-TIERED on the measured vocabulary count (we
-    * already force surfaceIri, so the count is free): a closed-world
-    * vocabulary broadcasts (zero shuffle of the big side); an
-    * open-vocabulary crawl falls back to a salted shuffle join — the
-    * triple side takes a deterministic url-hash salt and the vocabulary
-    * side is replicated across salts, so a Zipfian-hot surface never
-    * lands on one reducer. Edges stay a projection — upstream dedup on
-    * (url, subj, pred, obj) already makes edge rows unique, so there is
-    * no additional dedup shuffle either way. */
-  def graphFromTriples(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
-      broadcastVocabLimit: Long = defaultBroadcastVocabLimit,
-      includeProps: Boolean = false,
-      broadcastKbLimit: Long = defaultBroadcastKbLimit,
-      kbCountHint: Option[Long] = None): (DataFrame, DataFrame) =
-    graphFromTriplesReleasable(trip, kb, broadcastVocabLimit, includeProps,
-      broadcastKbLimit, kbCountHint) match { case (n, e, _) => (n, e) }
-
-  /** Like graphFromTriples, plus a RELEASE handle that unpersists the
-    * two internal vocabulary-sized caches. Per-micro-batch callers
-    * (StreamIngest.runLinked) MUST call it after their terminal action
-    * on the returned frames — a long-running stream on the plain
-    * variant would leak two persisted tables per micro-batch for the
-    * JVM lifetime (the pageRank leak pattern, review finding r03; an
-    * eager-localCheckpoint variant trades the cache leak for a
-    * checkpoint-RDD leak, caught by StreamIngestSpec's leak guard). */
+    * linking, IRI minting and node dedup are vocabulary-sized, and the
+    * vocabulary→IRI table is materialized ONCE (see surfaceIriReleasable).
+    * The join-back is SIZE-TIERED on that table's row count, observed
+    * during its one materialization: a closed-world vocabulary
+    * broadcasts (zero shuffle of the big side); an open-vocabulary crawl
+    * falls back to a salted shuffle join — the triple side takes a
+    * deterministic url-hash salt and the vocabulary side is replicated
+    * across salts, so a Zipfian-hot surface never lands on one reducer.
+    * Edges stay a projection — upstream dedup on (url, subj, pred, obj)
+    * already makes edge rows unique, so there is no additional dedup
+    * shuffle either way.
+    *
+    * `release` drops the materialized vocabulary table; callers MUST call
+    * it after their terminal action on the returned frames, or every
+    * build leaks one table for the JVM lifetime (a stream leaks one per
+    * micro-batch — the guard in StreamIngestSpec and CheckpointedSpec). */
   def graphFromTriplesReleasable(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
       broadcastVocabLimit: Long = defaultBroadcastVocabLimit,
-      includeProps: Boolean = false,
-      broadcastKbLimit: Long = defaultBroadcastKbLimit,
+      broadcastKbLimit: Long = Linking.defaultBroadcastKbLimit,
       kbCountHint: Option[Long] = None): (DataFrame, DataFrame, () => Unit) = {
-    val (surfaceIri, vocabN, release) = surfaceIriReleasable(trip, kb,
-      broadcastVocabLimit, broadcastKbLimit, kbCountHint)
-    val useBroadcast = vocabN <= broadcastVocabLimit
-    val nodes0 = reduceNodes(surfaceIri.select(col("iri"), col("entity_type"),
+    val (surfaceIri, vocabN, release) =
+      surfaceIriReleasable(trip, kb, broadcastKbLimit, kbCountHint)
+    val nodes = reduceNodes(surfaceIri.select(col("iri"), col("entity_type"),
       col("surface").as("name"), col("slug")))
-    // A3 on the node table (opt-in: one extra big-table aggregation)
-    val nodes = if (!includeProps) nodes0
-      else nodes0.join(nodePropsFromVocab(trip.toDF, surfaceIri), Seq("iri"), "left")
-    val edges = edgesFromVocab(trip.toDF, surfaceIri, useBroadcast)
+    val edges = edgesFromVocab(trip.toDF, surfaceIri, vocabN <= broadcastVocabLimit)
     (nodes, edges, release)
   }
 
@@ -191,25 +137,21 @@ object Pipeline {
     * big-table rollup (every distinct entity surface with its
     * deterministic (type, slug) representative — classify() is a pure
     * function of the surface, min_by just pins tie order), then
-    * linking + IRI minting, all vocabulary-sized. Exposed so a caller
-    * that builds nodes, edges AND node-props over the same corpus can
-    * CHECKPOINT this table once instead of re-running the rollup and
-    * the link joins per consumer (guide §2.4 — two operations keyed
-    * the same way share one build). Returns (surfaceIri, vocabN,
+    * linking + IRI minting, all vocabulary-sized, in ONE eager
+    * materialization (a local checkpoint) that also counts its rows
+    * through an Observation — no separate count job sizes the join-back
+    * tier. The mint joins two vocabulary-sized sides, so it carries no
+    * broadcast hint and AQE picks its join from run-time sizes. Exposed
+    * so a caller that builds nodes, edges AND node-props over the same
+    * corpus can CHECKPOINT this table once (guide §2.4 — two operations
+    * keyed the same way share one build). Returns (surfaceIri, vocabN,
     * release); callers must invoke release after their terminal
     * action. */
   def surfaceIriReleasable(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
-      broadcastVocabLimit: Long = defaultBroadcastVocabLimit,
-      broadcastKbLimit: Long = defaultBroadcastKbLimit,
+      broadcastKbLimit: Long = Linking.defaultBroadcastKbLimit,
       kbCountHint: Option[Long] = None,
       precomputedLinks: Option[DataFrame] = None): (DataFrame, Long, () => Unit) = {
     val surfaceInfo = surfaceRollup(trip.toDF)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vocabN = surfaceInfo.count() // forces the cache; sizes the tier
-    val useBroadcast = vocabN <= broadcastVocabLimit
-
-    // Linking + IRI minting, all vocabulary-sized. links has unique
-    // surface keys, so the non-broadcast join needs no salt (no skew).
     // A caller that has ALREADY linked this corpus's surface vocabulary
     // (e.g. a checkpointed link table the kg_links query also reads)
     // passes it in and linking runs once per corpus, not once per
@@ -218,11 +160,13 @@ object Pipeline {
     val links = precomputedLinks.getOrElse(
       linkSurfaces(surfaceInfo.select(col("surface")), kb, broadcastKbLimit,
         kbCountHint))
-    val surfaceIri = mintIris(surfaceInfo, links, useBroadcast)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    surfaceIri.count() // force once; both join-back tiers reuse the cache
-    (surfaceIri, vocabN,
-      () => { surfaceIri.unpersist(); surfaceInfo.unpersist(); () })
+    // links has unique surface keys, so the mint join needs no salt
+    val rows = Observation()
+    val surfaceIri = mintIris(surfaceInfo, links, useBroadcast = false)
+      .observe(rows, count(lit(1)).as("n"))
+      .localCheckpoint(eager = true)
+    val vocabN = rows.get("n").asInstanceOf[Long]
+    (surfaceIri, vocabN, () => { Bridge.releaseLocalCheckpoint(surfaceIri); () })
   }
 
   /** The ONE big-table rollup of the graph build: every distinct entity
@@ -254,8 +198,8 @@ object Pipeline {
   }
 
   /** Per-IRI property map, last-write-wins per property key: the props
-    * MAP<STRING,STRING> of the includeProps node tier, factored out so
-    * it can run against a CHECKPOINTED surfaceIri table. The reference
+    * MAP<STRING,STRING> a caller joins onto the node table by `iri`, run
+    * against a CHECKPOINTED surfaceIri table. The reference
     * buffer is per-document; across documents the write order is
     * pinned by (url, chunk_id, sent_idx) — url ascending as the
     * deterministic crawl-order stand-in (SURVEY.md §1 data model). */

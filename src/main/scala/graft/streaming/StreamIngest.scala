@@ -115,11 +115,12 @@ object StreamIngest {
   }
 
   /** Streaming LINKING: the flagship enrichment run continuously — each
-    * micro-batch's triples link against the static KB and materialize
-    * straight to the edge table (stream-static enrichment inside
-    * foreachBatch, where the top-1 link window is legal). Soundness is
-    * the same invariant the incremental batch build rests on: a
-    * surface's IRI is a PURE function of (surface, KB), so per-batch
+    * micro-batch's triples go through the batch path's one graph build
+    * (`Pipeline.graphFromTriplesReleasable`) against the static KB and
+    * materialize straight to the edge table (stream-static enrichment
+    * inside foreachBatch, where the top-1 link window is legal).
+    * Soundness is the same invariant the incremental batch build rests
+    * on: a surface's IRI is a PURE function of (surface, KB), so per-batch
     * edge builds union to exactly the all-at-once batch edges
     * (StreamIngestSpec asserts streamed == batch). The sink reuses the
     * (batch, pk) dynamic-overwrite idempotence contract of `run`.
@@ -140,8 +141,7 @@ object StreamIngest {
   def runLinked(spark: SparkSession, pagesDir: String, outDir: String,
       checkpointDir: String, kb: Dataset[graft.pipeline.KbEntry],
       kbCountHint: Option[Long] = None, nBuckets: Int = 16,
-      maxFilesPerTrigger: Option[Int] = None,
-      batchVocabBroadcastable: Boolean = true): StreamingQuery = {
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     import spark.implicits._
     val reader = spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
@@ -152,6 +152,8 @@ object StreamIngest {
       .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
       .parquet(pagesDir)
       .as[Page]
+    // the static KB is counted once per stream, not once per micro-batch
+    val kbN = Some(kbCountHint.getOrElse(kb.count()))
     transform(pages).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -165,39 +167,8 @@ object StreamIngest {
         // batch). Batch-sized, released in the finally below (the
         // checkpoint-RDD leak the StreamIngestSpec guard watches for).
         val trip = Kg.dedup(batch).localCheckpoint(true)
-        // Per-batch graph build. Default: the LEAN batch-bounded path —
-        // a micro-batch's surface vocabulary is bounded by the batch
-        // (maxFilesPerTrigger), so the vocabulary→IRI table is built in
-        // ONE eager materialization (no per-batch persist+count pair to
-        // size the broadcast tier — the bound IS the tier decision) and
-        // the link/join-back sides broadcast. Identical rows to
-        // graphFromTriplesReleasable (same rollup, same linkSurfaces,
-        // same mint — StreamIngestSpec's streamed==batch law pins it);
-        // measured ~2 fewer driver-planned jobs per batch. A caller
-        // whose batches are NOT vocabulary-bounded (no file cap, jumbo
-        // backfills) passes batchVocabBroadcastable=false to keep the
-        // size-tiered build.
         val (nodes, edges, release) =
-          if (!batchVocabBroadcastable)
-            graft.pipeline.Pipeline
-              .graphFromTriplesReleasable(trip, kb, kbCountHint = kbCountHint)
-          else {
-            val surfaceInfo = graft.pipeline.Pipeline.surfaceRollup(trip.toDF)
-            val links = graft.pipeline.Pipeline.linkSurfaces(
-              surfaceInfo.select(col("surface")), kb, kbCountHint = kbCountHint)
-            val surfaceIri = graft.pipeline.Pipeline
-              .mintIris(surfaceInfo, links, useBroadcast = true)
-              .localCheckpoint(true)
-            val nodes0 = graft.pipeline.Pipeline.reduceNodes(
-              surfaceIri.select(col("iri"), col("entity_type"),
-                col("surface").as("name"), col("slug")))
-            val edges0 = graft.pipeline.Pipeline
-              .edgesFromVocab(trip.toDF, surfaceIri, useBroadcast = true)
-            (nodes0, edges0, () => {
-              org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(surfaceIri)
-              ()
-            })
-          }
+          graft.pipeline.Pipeline.graphFromTriplesReleasable(trip, kb, kbCountHint = kbN)
         try {
           batch.sparkSession.conf
             .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -213,9 +184,10 @@ object StreamIngest {
             .write.mode("overwrite").partitionBy("batch", "pk")
             .parquet(s"$outDir/edges")
           // node delta: this batch's vocabulary-sized node rows (both
-          // writes reuse the build's forced surfaceIri cache). A crash
-          // between the two writes replays the whole batch — both sinks
-          // are partition-idempotent, so the rewrite is byte-identical.
+          // writes reuse the build's materialized surfaceIri table). A
+          // crash between the two writes replays the whole batch — both
+          // sinks are partition-idempotent, so the rewrite is
+          // byte-identical.
           nodes.withColumn("batch", lit(batchId))
             .repartition(1)
             .write.mode("overwrite").partitionBy("batch")

@@ -204,12 +204,14 @@ class CheckpointedSpec extends SparkTestBase {
     // triples — no stale rows from the victim's previous extraction
     import spark.implicits._
     val trip = spark.read.parquet(s"$dir/triples").drop("pk").as[TripleRow]
-    val (expectNodes, expectEdges) = Pipeline.graphFromTriples(trip, kb)
+    val (expectNodes, expectEdges, release) = Pipeline.graphFromTriplesReleasable(trip, kb)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.toString).toSeq
-    assert(canon(spark.read.parquet(s"$dir/nodes")) == canon(expectNodes))
-    // edges stay per-bucket consistent too
-    assert(canon(spark.read.parquet(s"$dir/edges").drop("pk")) == canon(expectEdges))
+    try {
+      assert(canon(spark.read.parquet(s"$dir/nodes")) == canon(expectNodes))
+      // edges stay per-bucket consistent too
+      assert(canon(spark.read.parquet(s"$dir/edges").drop("pk")) == canon(expectEdges))
+    } finally release()
     // and the rebuild actually removed something (the scenario is real):
     // bucket[victim] of pagesA had triples that pagesB lacks
     val aCount = Kg.pagesToTriples(pagesA)
@@ -231,5 +233,18 @@ class CheckpointedSpec extends SparkTestBase {
     // partition pruning works on the bucket column
     val pruned = edges.filter(col("pk") === 0)
     assert(pruned.count() >= 0)
+  }
+
+  test("runAll releases the graph build's tables (no persisted RDD outlives the run)") {
+    val dir = freshDir()
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    Checkpointed.runAll(Corpus.pages(spark, 120, 4), Corpus.kb(spark, 300), dir,
+      nBuckets = 8, runId = 1)
+    // the StreamIngestSpec leak guard: a JVM that runs runAll repeatedly
+    // must not accumulate cached vocabulary tables
+    val leaked = (spark.sparkContext.getPersistentRDDs -- cachedBefore).values
+      .filter(_.getStorageLevel.useMemory)
+    assert(leaked.isEmpty, s"leaked caches: ${leaked.map(_.name).mkString(", ")}")
+    assert(spark.read.parquet(s"$dir/edges").count() > 0)
   }
 }

@@ -2,10 +2,11 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.kernel.HtmlText
+import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline gates on the synthesized corpus (SURVEY.md §7.1
-  * M2/M3/M6): byte-identity, triple P/R ≥ 0.95 vs gold, linking parity
-  * between broadcast and salted strategies. */
+  * M2/M3/M6): byte-identity, triple P/R ≥ 0.95 vs gold, KB coverage of
+  * the linked graph. */
 class PipelineSpec extends SparkTestBase {
 
   private val N = 400L
@@ -45,34 +46,36 @@ class PipelineSpec extends SparkTestBase {
     assert(t.filter(r => nonEnUrls.contains(r.url)).count() == 0L)
   }
 
-  test("linking: salted shuffle join == broadcast join result") {
-    val pages = Corpus.pages(spark, 100, 4)
-    val ments = Kg.mentions(Kg.resolve(Kg.chunk(Kg.extractText(pages))))
+  test("linking covers most triple subjects with KB uris; rest minted deterministically") {
+    val trip = Kg.pagesToTriples(Corpus.pages(spark, 200, 4))
     val kb = Corpus.kb(spark, nDistractors = 500)
-    val a = Linking.linkBroadcast(ments, kb).orderBy("url", "surface")
-      .collect().map(_.toSeq).toSeq
-    val b = Linking.linkSalted(ments, kb, salts = 8).orderBy("url", "surface")
-      .collect().map(_.toSeq).toSeq
-    assert(a == b)
-    assert(a.nonEmpty)
+    val (nodes, edges, release) = Pipeline.graphFromTriplesReleasable(trip, kb)
+    try {
+      val total = edges.count()
+      val kbLinked = edges.join(kb.select(col("uri").as("src_iri")), Seq("src_iri"), "left_semi")
+        .count()
+      info(s"edges=$total srcKbLinked=$kbLinked nodes=${nodes.count()}")
+      assert(kbLinked.toDouble / total > 0.95) // world entities are all in the KB
+      assert(nodes.count() > 0 && total > 0)
+      // every node IRI unique
+      assert(nodes.count() == nodes.select("iri").distinct().count())
+      // the rest carry the deterministic mint: <slug>-<md5(surface)[0,8)>
+      val minted = nodes.join(kb.select(col("uri").as("iri")), Seq("iri"), "left_anti")
+      assert(minted.filter(col("iri") =!= concat(lit("https://kg.local/e/"), col("slug"),
+        lit("-"), substring(md5(col("name")), 1, 8))).count() == 0)
+    } finally release()
   }
 
-  test("linking covers most triple subjects with KB uris; rest minted deterministically") {
-    val pages = Corpus.pages(spark, 200, 4)
-    val resolved = Kg.resolve(Kg.chunk(Kg.extractText(pages)))
-    val trip = Kg.dedup(Kg.triples(resolved))
-    val ments = Kg.mentions(resolved)
-    val kb = Corpus.kb(spark, nDistractors = 500)
-    val linked = Linking.link(ments, kb)
-    val enriched = Linking.enrich(trip, linked)
-    val (nodes, edges) = Graph.materialize(enriched)
-    val total = enriched.count()
-    val kbLinked = enriched.filter(enriched("subj_kb_uri").isNotNull).count()
-    info(s"triples=$total subjKbLinked=$kbLinked nodes=${nodes.count()} edges=${edges.count()}")
-    assert(kbLinked.toDouble / total > 0.95) // world entities are all in the KB
-    assert(nodes.count() > 0 && edges.count() > 0)
-    // every node IRI unique
-    assert(nodes.count() == nodes.select("iri").distinct().count())
+  test("the graph build over zero triples yields empty nodes and edges") {
+    import spark.implicits._
+    val kb = Corpus.kb(spark, nDistractors = 50)
+    // a known-empty table and one that is empty only at run time
+    val empties = Seq(spark.emptyDataset[TripleRow],
+      Kg.pagesToTriples(Corpus.pages(spark, 40, 2).filter(col("lang") === "xx")))
+    empties.foreach { trip =>
+      val (nodes, edges, release) = Pipeline.graphFromTriplesReleasable(trip, kb)
+      try assert(nodes.count() == 0L && edges.count() == 0L) finally release()
+    }
   }
 
   test("J2 fuzzy candidates follow reference CONTAINS semantics (entity_linker.rs:296-312)") {

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 
@@ -11,6 +12,16 @@ class PlanSpec extends SparkTestBase {
 
   private def executedPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.queryExecution.executedPlan.toString
+  }
+
+  /** The one graph build; `body`'s actions run before its release. */
+  private def withGraph[T](trip: Dataset[TripleRow], kb: Dataset[KbEntry],
+      broadcastVocabLimit: Long = Pipeline.defaultBroadcastVocabLimit,
+      broadcastKbLimit: Long = Linking.defaultBroadcastKbLimit)(
+      body: (DataFrame, DataFrame) => T): T = {
+    val (nodes, edges, release) = Pipeline.graphFromTriplesReleasable(trip, kb,
+      broadcastVocabLimit, broadcastKbLimit)
+    try body(nodes, edges) finally release()
   }
 
   test("parquet scan: filters and projection push down to the reader") {
@@ -25,8 +36,7 @@ class PlanSpec extends SparkTestBase {
 
   test("KB linking joins are broadcast, never shuffled large-side or cartesian") {
     val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
-    val (nodes, edges) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500))
-    val plan = executedPlan(edges)
+    val plan = withGraph(trip, Corpus.kb(spark, 500))((_, edges) => executedPlan(edges))
     assert(plan.contains("BroadcastHashJoin"), "edges join-back should broadcast")
     assert(!plan.contains("CartesianProduct"), "no cartesian anywhere")
     assert(!plan.contains("SortMergeJoin"),
@@ -58,9 +68,9 @@ class PlanSpec extends SparkTestBase {
 
   test("forced large-vocab tier: join-back shuffles with salt, no vocab broadcast") {
     val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
-    val (_, edges) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500),
-      broadcastVocabLimit = 0L) // force the open-vocabulary path
-    val plan = executedPlan(edges)
+    // force the open-vocabulary path
+    val plan = withGraph(trip, Corpus.kb(spark, 500), broadcastVocabLimit = 0L)(
+      (_, edges) => executedPlan(edges))
     assert(!plan.contains("CartesianProduct"))
     // the triple-side join keys must carry the salt (crc32 % S)
     assert(plan.contains("crc32"), "salt term missing from the shuffle join-back:\n" + plan.take(1200))
@@ -74,12 +84,12 @@ class PlanSpec extends SparkTestBase {
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("url", "src_iri", "pred", "dst_iri", "obj_literal")
         .collect().map(_.toSeq).toSeq
-    val (nB, eB) = Pipeline.graphFromTriples(trip, kb)
-    val (nS, eS) = Pipeline.graphFromTriples(trip, kb, broadcastVocabLimit = 0L)
-    assert(sorted(eB) == sorted(eS))
-    assert(nB.orderBy("iri").collect().map(_.toSeq).toSeq ==
-      nS.orderBy("iri").collect().map(_.toSeq).toSeq)
-    assert(eB.count() > 0)
+    def rows(n: DataFrame) = n.orderBy("iri").collect().map(_.toSeq).toSeq
+    val (nB, eB) = withGraph(trip, kb)((n, e) => (rows(n), sorted(e)))
+    val (nS, eS) = withGraph(trip, kb, broadcastVocabLimit = 0L)((n, e) => (rows(n), sorted(e)))
+    assert(eB == eS)
+    assert(nB == nS)
+    assert(eB.nonEmpty)
   }
 
   test("entityProps: map-side partial aggregate, single exchange") {
@@ -154,30 +164,13 @@ class PlanSpec extends SparkTestBase {
     val lS = Pipeline.linkSurfaces(surfaces, kb, broadcastKbLimit = 0L)
     assert(sortedL(lB) == sortedL(lS))
     assert(lB.count() > 0)
-    // and end-to-end through graphFromTriples
-    def sortedE(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("url", "src_iri", "pred", "dst_iri", "obj_literal")
-        .collect().map(_.toSeq).toSeq
-    val (nB, eB) = Pipeline.graphFromTriples(trip, kb)
-    val (nS, eS) = Pipeline.graphFromTriples(trip, kb, broadcastKbLimit = 0L)
-    assert(sortedE(eB) == sortedE(eS))
-    assert(nB.orderBy("iri").collect().map(_.toSeq).toSeq ==
-      nS.orderBy("iri").collect().map(_.toSeq).toSeq)
-  }
-
-  test("size-tiered operator-form link: tiers identical, large tier salts the KB") {
-    import spark.implicits._
-    val ments = (0 until 300).map(i =>
-      MentionRow(s"https://d${i % 40}.example.org/p$i", 0,
-        if (i % 3 == 0) "Acme Corp" else if (i % 3 == 1) "Acme Crop" else s"Entity $i",
-        "Organization", 0, 9, 0.9)).toDS
-    val kb = Corpus.kb(spark, 200)
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("url", "surface", "uri").collect().map(_.toSeq).toSeq
-    val b = Linking.link(ments, kb)
-    val s = Linking.link(ments, kb, broadcastKbLimit = 0L)
-    assert(sorted(b) == sorted(s))
-    assert(b.count() > 0)
+    // and end-to-end through the graph build
+    def sorted(n: DataFrame, e: DataFrame) =
+      (n.orderBy("iri").collect().map(_.toSeq).toSeq,
+        e.orderBy("url", "src_iri", "pred", "dst_iri", "obj_literal")
+          .collect().map(_.toSeq).toSeq)
+    assert(withGraph(trip, kb)(sorted) ==
+      withGraph(trip, kb, broadcastKbLimit = 0L)(sorted))
   }
 
   test("jwSimilarityJoin plans a hash join on the length bucket, never a cartesian") {
@@ -341,15 +334,24 @@ class PlanSpec extends SparkTestBase {
 
   test("salted join variant spreads one hot key across all salts") {
     import spark.implicits._
-    // one very hot mention key joined against the KB
+    // one very hot subject surface, stated once on each of 2000 pages,
+    // through the salted join-back tier of the graph build
     val hot = (0 until 2000).map(i =>
-      MentionRow(s"https://d$i.example.org/x", 0, "Acme Corp", "Organization", 0, 9, 0.9))
-    val ments = hot.toDS
-    val df = Linking.linkSalted(ments, Corpus.kb(spark, 100), salts = 8)
-    // correctness: every url still links
-    assert(df.count() == 2000)
-    val plan = executedPlan(df)
-    assert(plan.contains("pmod") || plan.toLowerCase.contains("salt"),
-      "salt term must appear in the physical plan")
+      TripleRow(s"https://d$i.example.org/x", "acme_corp", "locat", "Lyon", "lyon",
+        "Acme Corp", obj_is_entity = true, "Organization", "Place", 0, 0, 0.9, "rule")).toDS
+    val (srcIris, n, plan) = withGraph(hot, Corpus.kb(spark, 100), broadcastVocabLimit = 0L) {
+      (_, edges) => (edges.select("src_iri").distinct().count(), edges.count(), executedPlan(edges))
+    }
+    // correctness: every page's triple still joins back, to ONE node
+    assert(n == 2000 && srcIris == 1)
+    // both join keys carry the salt and the vocabulary side is exploded
+    // across salts (the crc32(url) salt itself is constant-folded into
+    // the LocalTableScan of this in-memory triple table)
+    assert(plan.contains("salt#") && plan.contains("explode"),
+      "salt term must appear in the physical plan:\n" + plan.take(1200))
+    // the url-hash salt splits the hot surface across every salt value
+    val salts = hot.select(pmod(crc32(col("url")), lit(Pipeline.joinBackSalts)).as("s"))
+      .distinct().count()
+    assert(salts == Pipeline.joinBackSalts)
   }
 }
