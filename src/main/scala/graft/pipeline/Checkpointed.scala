@@ -22,7 +22,8 @@ import scala.jdk.CollectionConverters._
   * never appended), then commits one manifest per bucket. Manifests are
   * written AFTER the data, so a crash between data and manifest merely
   * re-does that bucket; the deterministic kernel makes the rewrite
-  * byte-identical. This is the Iceberg-commit pattern expressed on plain
+  * row-identical (rows inside a file follow shuffle order). This is
+  * the Iceberg-commit pattern expressed on plain
   * partitioned parquet (no Iceberg jars in this sandbox —
   * `format("iceberg")` + REPLACE PARTITIONS is the one-line swap,
   * SURVEY.md §7.0).
@@ -112,10 +113,7 @@ object Checkpointed {
     val trip = Kg.pagesToTriples(todo.drop("pk").as[Page](pages.encoder))
       .withColumn("pk", bucketOf(col("url"), nBuckets))
 
-    // idempotent per-partition overwrite: a killed run's partial bucket
-    // directories are replaced wholesale on retry
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    trip.write.mode("overwrite").partitionBy("pk").parquet(s"$baseDir/triples")
+    writeBuckets(trip, s"$baseDir/triples", "pk")
 
     // per-bucket lineage from the written files (ground truth, not the
     // plan) — restricted to THIS run's fresh buckets: the pk filter is
@@ -135,6 +133,24 @@ object Checkpointed {
     writeRunMetrics(baseDir, runId, manifests)
     manifests
   }
+
+  /** The bucketed write every `pk`-partitioned table goes through
+    * (triples, batch edges, the stream sink's edges). Idempotent
+    * per-partition overwrite: a killed run's partial bucket directories
+    * are replaced wholesale on retry. The mode is set on this write
+    * only — never on the session, where it would turn a caller's later
+    * `overwrite` + `partitionBy` write into a partial replace. The
+    * rebalance on `pk` gives each bucket about one file: without it
+    * every write task opens a file in every bucket directory it sees
+    * (tasks × buckets files, all of which later reads open), and AQE
+    * still splits an oversized bucket at crawl scale. */
+  private[graft] def writeBuckets(df: DataFrame, path: String,
+      partitionCols: String*): Unit =
+    df.hint("rebalance", col("pk"))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
 
   private def writeRunMetrics(baseDir: String, runId: Long, ms: Seq[BucketManifest]): Unit = {
     val dir = Paths.get(baseDir, "_metrics")
@@ -245,9 +261,8 @@ object Checkpointed {
           Files.delete(d)
         }
       }
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets))
-        .write.mode("overwrite").partitionBy("pk").parquet(s"$baseDir/edges")
+      writeBuckets(edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets)),
+        s"$baseDir/edges", "pk")
     } finally release()
 
     // graph markers LAST, each stamped with its bucket's TRIPLE-manifest

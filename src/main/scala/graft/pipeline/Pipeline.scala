@@ -7,20 +7,26 @@ import org.apache.spark.sql.graftbridge.Bridge
 
 /** Flagship end-to-end pipeline, shaped for 100 TB:
   *
-  *  1. ONE narrow NLP pass (extract→chunk→coref→extract relations) —
-  *     no shuffle, whole corpus scanned exactly once;
-  *  2. triple dedup — the first unavoidable shuffle, keyed
-  *     (url, subj, pred, obj);
+  *  1. ONE narrow NLP pass (extract→chunk→coref→extract relations→
+  *     normalize→dedup in-row) — no shuffle, whole corpus scanned
+  *     exactly once;
+  *  2. the vocabulary rollup — ONE scan of the triple table feeding
+  *     one surface-keyed aggregation (subj and entity-obj surfaces
+  *     inlined from the same row), materialized once;
   *  3. linking over DISTINCT SURFACE STRINGS, not (url, surface):
   *     link results depend only on the surface (the reference's
   *     per-name lookup, entity_linker.rs:486-499, has no document
   *     input), so the link table shrinks from O(docs×mentions) to
-  *     O(vocabulary) — Zipfian mention skew collapses into single rows
-  *     and the join-back is a broadcast;
-  *  4. graph dedup by IRI / edge key.
+  *     O(vocabulary) — Zipfian mention skew collapses into single rows;
+  *  4. nodes: one vocabulary-sized reduce by IRI; edges: a second scan
+  *     of the triple table joined back to the vocabulary→IRI table
+  *     (broadcast, so no shuffle of the big side; salted above the
+  *     vocabulary limit).
   *
-  * Total shuffles: 3 fixed-size (dedup, nodes, edges) + vocabulary-sized
-  * linking; zero shuffle of raw text after step 1.
+  * Shuffles over the big table: the rollup's surface exchange (after
+  * map-side partial aggregation), plus the salted join-back above the
+  * vocabulary limit; everything else shuffled is vocabulary-sized. Zero
+  * shuffle of raw text after step 1.
   */
 object Pipeline {
 
@@ -106,7 +112,8 @@ object Pipeline {
     * aggregation over the big table (the vocabulary rollup —
     * surface→(type, slug), Zipfian mentions collapse to single rows);
     * linking, IRI minting and node dedup are vocabulary-sized, and the
-    * vocabulary→IRI table is materialized ONCE (see surfaceIriReleasable).
+    * rollup and the vocabulary→IRI table are each materialized ONCE (see
+    * surfaceIriReleasable).
     * The join-back is SIZE-TIERED on that table's row count, observed
     * during its one materialization: a closed-world vocabulary
     * broadcasts (zero shuffle of the big side); an open-vocabulary crawl
@@ -117,7 +124,7 @@ object Pipeline {
     * already makes edge rows unique, so there is no additional dedup
     * shuffle either way.
     *
-    * `release` drops the materialized vocabulary table; callers MUST call
+    * `release` drops the materialized vocabulary tables; callers MUST call
     * it after their terminal action on the returned frames, or every
     * build leaks one table for the JVM lifetime (a stream leaks one per
     * micro-batch — the guard in StreamIngestSpec and CheckpointedSpec). */
@@ -136,22 +143,31 @@ object Pipeline {
   /** The vocabulary → IRI stage of the graph build on its own: ONE
     * big-table rollup (every distinct entity surface with its
     * deterministic (type, slug) representative — classify() is a pure
-    * function of the surface, min_by just pins tie order), then
-    * linking + IRI minting, all vocabulary-sized, in ONE eager
-    * materialization (a local checkpoint) that also counts its rows
-    * through an Observation — no separate count job sizes the join-back
-    * tier. The mint joins two vocabulary-sized sides, so it carries no
-    * broadcast hint and AQE picks its join from run-time sizes. Exposed
-    * so a caller that builds nodes, edges AND node-props over the same
+    * function of the surface, min_by just pins tie order), materialized
+    * by an eager local checkpoint that also counts its rows through an
+    * Observation — no separate count job sizes the join-back tier. Then
+    * linking + IRI minting, both vocabulary-sized, read that checkpoint
+    * and are materialized once more. Without the first checkpoint the
+    * link and mint sides would each re-run the rollup: column pruning
+    * makes their aggregates differ, so no exchange is reused, and the
+    * link's left_anti is pushed below the aggregate into a third copy
+    * (PlanSpec counts the triple-table scans). The mint joins two vocabulary-sized sides, so it carries no broadcast
+    * hint and AQE picks its join from run-time sizes. Exposed so a
+    * caller that builds nodes, edges AND node-props over the same
     * corpus can CHECKPOINT this table once (guide §2.4 — two operations
     * keyed the same way share one build). Returns (surfaceIri, vocabN,
-    * release); callers must invoke release after their terminal
-    * action. */
+    * release); callers must invoke release after their terminal action;
+    * it drops both checkpoints. */
   def surfaceIriReleasable(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
       broadcastKbLimit: Long = Linking.defaultBroadcastKbLimit,
       kbCountHint: Option[Long] = None,
       precomputedLinks: Option[DataFrame] = None): (DataFrame, Long, () => Unit) = {
+    val rows = Observation()
     val surfaceInfo = surfaceRollup(trip.toDF)
+      .observe(rows, count(lit(1)).as("n"))
+      .localCheckpoint(eager = true)
+    // the mint is a left join on unique surface keys: one row per surface
+    val vocabN = rows.get("n").asInstanceOf[Long]
     // A caller that has ALREADY linked this corpus's surface vocabulary
     // (e.g. a checkpointed link table the kg_links query also reads)
     // passes it in and linking runs once per corpus, not once per
@@ -161,27 +177,32 @@ object Pipeline {
       linkSurfaces(surfaceInfo.select(col("surface")), kb, broadcastKbLimit,
         kbCountHint))
     // links has unique surface keys, so the mint join needs no salt
-    val rows = Observation()
     val surfaceIri = mintIris(surfaceInfo, links, useBroadcast = false)
-      .observe(rows, count(lit(1)).as("n"))
       .localCheckpoint(eager = true)
-    val vocabN = rows.get("n").asInstanceOf[Long]
-    (surfaceIri, vocabN, () => { Bridge.releaseLocalCheckpoint(surfaceIri); () })
+    (surfaceIri, vocabN, () => {
+      Bridge.releaseLocalCheckpoint(surfaceIri)
+      Bridge.releaseLocalCheckpoint(surfaceInfo)
+      ()
+    })
   }
 
   /** The ONE big-table rollup of the graph build: every distinct entity
-    * surface with its deterministic (type, slug) representative. */
-  def surfaceRollup(trip: DataFrame): DataFrame =
+    * surface with its deterministic (type, slug) representative. Each
+    * triple row yields its subject and, when the object is an entity,
+    * its object, both from one scan (a subj ∪ obj union would read the
+    * table twice). */
+  def surfaceRollup(trip: DataFrame): DataFrame = {
+    val subj = struct(col("subj_surface").as("surface"),
+      col("subj_type").as("entity_type"), col("subj").as("slug"))
+    val obj = when(col("obj_is_entity"), struct(col("obj").as("surface"),
+      col("obj_type").as("entity_type"), col("obj_slug").as("slug")))
     trip
-      .select(col("subj_surface").as("surface"), col("subj_type").as("entity_type"),
-        col("subj").as("slug"))
-      .unionByName(trip.filter(col("obj_is_entity"))
-        .select(col("obj").as("surface"), col("obj_type").as("entity_type"),
-          col("obj_slug").as("slug")))
+      .select(inline(filter(array(subj, obj), _.isNotNull)))
       .groupBy(col("surface"))
       .agg(min_by(struct(col("entity_type"), col("slug")),
         struct(col("entity_type"), col("slug"))).as("i"))
       .select(col("surface"), col("i.entity_type").as("entity_type"), col("i.slug").as("slug"))
+  }
 
   /** Attach link URIs and mint IRIs for unlinked surfaces (md5 prefix —
     * portable: identical in DuckDB, so the whole graph build stays

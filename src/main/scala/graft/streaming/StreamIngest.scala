@@ -32,7 +32,7 @@ object StreamIngest {
     * (triples must stay unique on (url,subj,pred,obj) for the graph
     * build). The output is therefore partitioned by (batch, pk) and
     * written with dynamic partition overwrite: a replayed batchId
-    * replaces exactly its own partitions, byte-identical (the kernel is
+    * replaces exactly its own partitions, row-identical (the kernel is
     * deterministic), never appending twice. */
   def run(spark: SparkSession, pagesDir: String, outDir: String,
       checkpointDir: String, nBuckets: Int = 16): StreamingQuery = {
@@ -55,12 +55,12 @@ object StreamIngest {
     * twice yields the same rows as writing it once. */
   def writeBatch(batch: Dataset[TripleRow], batchId: Long, outDir: String,
       nBuckets: Int): Unit = {
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     Kg.dedup(batch)
       .withColumn("batch", lit(batchId))
       .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets))
-      .write.mode("overwrite").partitionBy("batch", "pk")
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch", "pk")
       .parquet(s"$outDir/triples")
     ()
   }
@@ -159,38 +159,31 @@ object StreamIngest {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[TripleRow], batchId: Long) =>
         // Eagerly materialize the batch's deduped triples ONCE: the
-        // graph build references them from four plan branches (the
-        // surfaceInfo union twice, nodes, edges), and in a micro-batch
-        // there is no parquet checkpoint upstream — each branch would
-        // re-run the batch's extraction + dedup shuffle (measured: the
-        // whole slice extracts in ~0.5 s but runLinked paid ~7 s per
-        // batch). Batch-sized, released in the finally below (the
-        // checkpoint-RDD leak the StreamIngestSpec guard watches for).
+        // graph build reads them twice (the rollup and the edge
+        // join-back), and in a micro-batch there is no parquet
+        // checkpoint upstream — each read would re-run the batch's
+        // extraction + dedup shuffle (measured: the whole slice extracts
+        // in ~0.5 s but runLinked paid ~7 s per batch). Batch-sized,
+        // released in the finally below (the checkpoint-RDD leak the
+        // StreamIngestSpec guard watches for).
         val trip = Kg.dedup(batch).localCheckpoint(true)
         val (nodes, edges, release) =
           graft.pipeline.Pipeline.graphFromTriplesReleasable(trip, kb, kbCountHint = kbN)
         try {
-          batch.sparkSession.conf
-            .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          // repartition by the partition column before the write: the
-          // edge plan ends with ~32 narrow tasks that would each open a
-          // file in every pk directory (~32×nBuckets tiny files per
-          // batch, and the dynamic-overwrite commit walks them all) —
-          // one pk-keyed shuffle of the batch-sized edges yields one
-          // file per pk (guide §6 small-files; identical rows)
-          edges.withColumn("batch", lit(batchId))
-            .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets))
-            .repartition(col("pk"))
-            .write.mode("overwrite").partitionBy("batch", "pk")
-            .parquet(s"$outDir/edges")
+          Checkpointed.writeBuckets(
+            edges.withColumn("batch", lit(batchId))
+              .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets)),
+            s"$outDir/edges", "batch", "pk")
           // node delta: this batch's vocabulary-sized node rows (both
           // writes reuse the build's materialized surfaceIri table). A
           // crash between the two writes replays the whole batch — both
           // sinks are partition-idempotent, so the rewrite is
-          // byte-identical.
+          // row-identical.
           nodes.withColumn("batch", lit(batchId))
             .repartition(1)
-            .write.mode("overwrite").partitionBy("batch")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch")
             .parquet(s"$outDir/nodes")
         } finally {
           release()

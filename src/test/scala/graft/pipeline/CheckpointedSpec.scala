@@ -247,4 +247,37 @@ class CheckpointedSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked caches: ${leaked.map(_.name).mkString(", ")}")
     assert(spark.read.parquet(s"$dir/edges").count() > 0)
   }
+
+  test("runAll leaves the session's partition-overwrite mode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try {
+      Checkpointed.runAll(Corpus.pages(spark, 120, 4), Corpus.kb(spark, 300),
+        freshDir(), nBuckets = 8, runId = 1)
+      // a caller's later overwrite + partitionBy write must still replace
+      // the whole table, not silently only the partitions it rewrites
+      assert(spark.conf.get(key) == "static")
+    } finally spark.conf.set(key, before)
+  }
+
+  test("a fresh runAll writes exactly one file per bucket of triples and edges") {
+    import scala.jdk.CollectionConverters._
+    val dir = freshDir()
+    Checkpointed.runAll(Corpus.pages(spark, 200, 4), Corpus.kb(spark, 300), dir,
+      nBuckets = 8, runId = 1)
+    def list(p: java.nio.file.Path) = {
+      val s = Files.list(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    Seq("triples", "edges").foreach { table =>
+      val buckets = list(Paths.get(dir, table))
+        .filter(_.getFileName.toString.startsWith("pk="))
+      assert(buckets.nonEmpty, s"$table has no bucket directories")
+      buckets.foreach { b =>
+        val parts = list(b).map(_.getFileName.toString).filter(_.startsWith("part-"))
+        assert(parts.size == 1, s"$table/${b.getFileName}: ${parts.size} data files")
+      }
+    }
+  }
 }

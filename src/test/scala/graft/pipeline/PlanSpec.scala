@@ -4,6 +4,7 @@ import graft.SparkTestBase
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan gates: the properties that make the 100 TB story true
   * must be visible in `.explain`, not just intended (builder prompt:
@@ -353,5 +354,40 @@ class PlanSpec extends SparkTestBase {
     val salts = hot.select(pmod(crc32(col("url")), lit(Pipeline.joinBackSalts)).as("s"))
       .distinct().count()
     assert(salts == Pipeline.joinBackSalts)
+  }
+
+  test("the vocabulary stage reads the triple table exactly once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.graftbridge.CoreBridge
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_plan").resolve("triples").toString
+    Kg.pagesToTriples(Corpus.pages(spark, 200, 4)).write.parquet(path)
+    val trip = spark.read.parquet(path).as[TripleRow]
+    val kb = Corpus.kb(spark, 300)
+    // every plan the build executes, AQE's final stages included
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    CoreBridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val (_, _, release) =
+      try Pipeline.surfaceIriReleasable(trip, kb)
+      finally {
+        CoreBridge.drainListenerBus(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    release()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = plans.asScala.toSeq.flatMap(p => helper.collectWithSubqueries(p) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.endsWith("/triples")) => s
+    })
+    assert(plans.size > 0, "no executed plan was observed")
+    assert(scans.size == 1, s"the triple table was scanned ${scans.size} times")
   }
 }
