@@ -64,7 +64,9 @@ object Verify {
   /** Deterministic oracle inputs (pure functions of the sf scale). */
   def dumpInputs(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     val n = SparkEntry.pagesFor(sfDir)
-    def w(df: DataFrame, name: String): Unit =
+    // by-name, so an input whose source is missing (say, an absent
+    // fixture) fails its own dump instead of aborting the whole run
+    def w(df: => DataFrame, name: String): Unit =
       try df.write.mode("overwrite").parquet(s"${outDir}__inputs/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] input dump $name failed: ${e.getMessage}")
@@ -96,7 +98,7 @@ object Verify {
     // trained PQ codebooks (same memoized-fit rationale) for q_knn_pq
     w(ops.Similarity.pqCodebooksToDF(spark,
       SparkEntry.pqCodebooksFor(spark, sfDir)), "pq_codebooks")
-    val webnlg = sources.WebNlg.entries(spark, SparkEntry.webnlgPath)
+    lazy val webnlg = sources.WebNlg.entries(spark, SparkEntry.webnlgPath)
     w(webnlg.toDF, "webnlg")
     w(sources.WebNlg.predicted(webnlg), "webnlg_pred")
     w(sources.WebNlg.normalizedGold(webnlg), "webnlg_gold")

@@ -135,7 +135,7 @@ object Checkpointed {
   }
 
   /** The bucketed write every `pk`-partitioned table goes through
-    * (triples, batch edges, the stream sink's edges). Idempotent
+    * (triples, batch edges, the stream sinks' triples and edges). Idempotent
     * per-partition overwrite: a killed run's partial bucket directories
     * are replaced wholesale on retry. The mode is set on this write
     * only — never on the session, where it would turn a caller's later
@@ -151,6 +151,15 @@ object Checkpointed {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
+
+  /** Delete a flat directory — its files, then the directory — if it
+    * exists. */
+  private[graft] def deleteDir(dir: java.nio.file.Path): Unit =
+    if (Files.exists(dir)) {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toList.foreach(Files.delete) finally s.close()
+      Files.delete(dir)
+    }
 
   private def writeRunMetrics(baseDir: String, runId: Long, ms: Seq[BucketManifest]): Unit = {
     val dir = Paths.get(baseDir, "_metrics")
@@ -241,26 +250,14 @@ object Checkpointed {
       spark.read.parquet(tmpNodes).write.mode("overwrite").parquet(s"$baseDir/nodes")
       // drop the staging dir (left in place it triggers spurious
       // "All paths were ignored" warnings on later reads of baseDir)
-      val tmpPath = Paths.get(tmpNodes)
-      if (Files.exists(tmpPath)) {
-        val s0 = Files.list(tmpPath)
-        try s0.iterator().asScala.toList.foreach(Files.delete) finally s0.close()
-        Files.delete(tmpPath)
-      }
+      deleteDir(Paths.get(tmpNodes))
 
       // edges: dynamic overwrite replaces ONLY the fresh pk partitions.
       // Pre-delete the pending buckets' partitions first: dynamic
       // overwrite cannot clear a rebuilt bucket that now yields ZERO edge
       // rows, which would otherwise freeze stale edges in place behind a
       // fresh graph marker (round-3 finding).
-      if (hadGraph) pending.foreach { pk =>
-        val d = Paths.get(baseDir, "edges", s"pk=$pk")
-        if (Files.exists(d)) {
-          val s = Files.list(d)
-          try s.iterator().asScala.toList.foreach(Files.delete) finally s.close()
-          Files.delete(d)
-        }
-      }
+      if (hadGraph) pending.foreach(pk => deleteDir(Paths.get(baseDir, "edges", s"pk=$pk")))
       writeBuckets(edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets)),
         s"$baseDir/edges", "pk")
     } finally release()

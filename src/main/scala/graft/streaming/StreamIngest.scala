@@ -54,16 +54,12 @@ object StreamIngest {
     * contract is directly testable: writing the same (batch, batchId)
     * twice yields the same rows as writing it once. */
   def writeBatch(batch: Dataset[TripleRow], batchId: Long, outDir: String,
-      nBuckets: Int): Unit = {
-    Kg.dedup(batch)
-      .withColumn("batch", lit(batchId))
-      .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch", "pk")
-      .parquet(s"$outDir/triples")
-    ()
-  }
+      nBuckets: Int): Unit =
+    Checkpointed.writeBuckets(
+      Kg.dedup(batch)
+        .withColumn("batch", lit(batchId))
+        .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets)),
+      s"$outDir/triples", "batch", "pk")
 
   /** Windowed throughput monitor: triples per 1-hour warc_ts window with
     * a 2-hour watermark — the standard watermark + window aggregation
@@ -220,15 +216,7 @@ object StreamIngest {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "static") // replace ALL deltas
       .partitionBy("batch").parquet(s"$outDir/nodes")
-    val p = java.nio.file.Paths.get(tmp)
-    if (java.nio.file.Files.exists(p)) {
-      val s0 = java.nio.file.Files.list(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        s0.iterator().asScala.toList.foreach(java.nio.file.Files.delete)
-      } finally s0.close()
-      java.nio.file.Files.delete(p)
-    }
+    Checkpointed.deleteDir(java.nio.file.Paths.get(tmp))
   }
 
   /** Streaming CONTENT dedup: pages deduplicated across micro-batches

@@ -66,4 +66,16 @@ class FunctionsSpec extends SparkTestBase {
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), plan)
   }
+
+  test("slug rejects a wrong arity and a non-string argument at analysis") {
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "slug", GraftExtensions.slugFunction._3, "built-in")
+    val arity = intercept[Exception](spark.sql("SELECT slug('a', 'b')").collect())
+    val chain = Iterator.iterate[Throwable](arity)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(e => String.valueOf(e.getMessage)
+      .contains("slug expects exactly 1 argument, got 2")), arity.toString)
+    val wrongType = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT slug(123)").collect())
+    assert(wrongType.getMessage.contains("slug requires STRING, got IntegerType"), wrongType.getMessage)
+  }
 }

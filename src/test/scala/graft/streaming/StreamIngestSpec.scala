@@ -78,12 +78,29 @@ class StreamIngestSpec extends SparkTestBase {
     val work = Files.createTempDirectory("graft_replay").toString
     val pages = Corpus.pages(spark, 60, 2)
     val batch = Kg.pagesToTriples(pages)
-    StreamIngest.writeBatch(batch, 7L, s"$work/out", nBuckets = 4)
-    val once = spark.read.parquet(s"$work/out/triples").count()
-    // simulate the at-least-once replay: same batchId written again
-    StreamIngest.writeBatch(batch, 7L, s"$work/out", nBuckets = 4)
-    val twice = spark.read.parquet(s"$work/out/triples").count()
+    // keep the dedup shuffle's 4 partitions: AQE would coalesce this
+    // small batch into one write task, which hides a per-task file
+    // fan-out that crawl-sized batches have
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    val (once, twice) =
+      try {
+        StreamIngest.writeBatch(batch, 7L, s"$work/out", nBuckets = 4)
+        val once = spark.read.parquet(s"$work/out/triples").count()
+        // simulate the at-least-once replay: same batchId written again
+        StreamIngest.writeBatch(batch, 7L, s"$work/out", nBuckets = 4)
+        (once, spark.read.parquet(s"$work/out/triples").count())
+      } finally spark.conf.unset(coalesce)
     assert(once == twice && once > 0)
+    // the sink writes one file per (batch, pk) directory, not one per
+    // write task that saw the bucket
+    val pkDirs = new java.io.File(s"$work/out/triples/batch=7").listFiles()
+      .filter(_.getName.startsWith("pk="))
+    assert(pkDirs.nonEmpty)
+    pkDirs.foreach { d =>
+      val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"${d.getName}: ${files.mkString(", ")}")
+    }
   }
 
   test("streaming dedup: a recrawl in a later micro-batch emits nothing new") {
